@@ -258,7 +258,10 @@ object Dedup {
     if (ra < rb) ra * n + rb else rb * n + ra
   }
 
-  /** Sort + adjacent-dedup of encoded pairs back to (a, b) with a < b. */
+  /** Sort + adjacent-dedup of encoded pairs back to (a, b): a < b for the
+    * min/max-oriented `encodePair`, (index id, probe id) for the directed
+    * encoding of `candidatePairsAcrossLocal`.
+    */
   private def decodeDistinctPairs(
       ranks: (Array[Long], java.util.HashMap[Long, Int]),
       enc: Array[Long]): Seq[(Long, Long)] = {
@@ -275,13 +278,11 @@ object Dedup {
   }
 
   /** Band buckets of a collected (id, shingle hashes) batch — the shared
-    * front of the driver-local LSH kernels: register i = min over the
-    * doc's shingle hashes of (h * hashA(i) + hashB(i)) % P in 64-bit
-    * arithmetic (identical two's-complement overflow and sign-preserving
-    * % on the JVM and in Spark SQL), bucket key = (band, RowsPerBand
-    * register slice) — the SQL side's concat_ws("_") key is injective
-    * for a fixed slice width, so tuple equality IS key equality. Docs
-    * with zero shingles are skipped exactly like the rowwise signature's
+    * front of the driver-local LSH kernels: registers from
+    * `minhashRegisters`, bucket key = (band, RowsPerBand register
+    * slice) — the SQL side's concat_ws("_") key is injective for a fixed
+    * slice width, so tuple equality IS key equality. Docs with zero
+    * shingles are skipped exactly like the rowwise signature's
     * `size(hs) > 0` filter.
     */
   private def bandBucketsLocal(docShingles: Seq[(Long, Seq[Long])])
@@ -297,20 +298,7 @@ object Dedup {
         case w: scala.collection.immutable.ArraySeq.ofLong => w.unsafeArray
         case other => other.toArray
       }
-      val regs = new Array[Long](NumHashes)
-      var i = 0
-      while (i < NumHashes) {
-        val a = hashA(i); val b = hashB(i)
-        var m = Long.MaxValue
-        var j = 0
-        while (j < hs.length) {
-          val v = (hs(j) * a + b) % P
-          if (v < m) m = v
-          j += 1
-        }
-        regs(i) = m
-        i += 1
-      }
+      val regs = minhashRegisters(hs)
       var band = 0
       while (band < Bands) {
         val key = (band,
@@ -342,24 +330,15 @@ object Dedup {
       raw += pids.length.toLong * iids.length
     if (raw > pairBudget) return None
     // DIRECTED primitive encoding (a = index id, b = probe id — no
-    // min/max orientation), sort + adjacent-dedup; same no-boxing
-    // rationale as candidatePairsLocal
+    // min/max orientation); same no-boxing rationale as
+    // candidatePairsLocal
     val ranks = idRanks(index ++ probe)
     val n = ranks._1.length.toLong
     val enc = new scala.collection.mutable.ArrayBuilder.ofLong
     for ((k, pids) <- probeBuckets; iids <- idxBuckets.get(k);
          b <- pids; a <- iids)
       enc += ranks._2.get(a).toLong * n + ranks._2.get(b).toLong
-    val e = enc.result()
-    java.util.Arrays.sort(e)
-    val out = Seq.newBuilder[(Long, Long)]
-    var i = 0
-    while (i < e.length) {
-      if (i == 0 || e(i) != e(i - 1))
-        out += ((ranks._1((e(i) / n).toInt), ranks._1((e(i) % n).toInt)))
-      i += 1
-    }
-    Some(out.result())
+    Some(decodeDistinctPairs(ranks, enc.result()))
   }
 
   /** Driver-local twin of `invertedCandidatePairs` over a collected
@@ -415,44 +394,66 @@ object Dedup {
     Some(out.result())
   }
 
-  /** Sorted primitive shingle arrays keyed by id — the evidence kernel's
-    * input shape (two-pointer intersections instead of boxed-set
-    * membership tests).
+  /** Exact-intersection EVIDENCE for given pairs over a collected
+    * (id, distinct shingle hashes) batch: (a, b, inter, sza, szb) —
+    * integers only, so the jaccard/containment RATIOS (and their r4
+    * rounding) are computed by the SAME Column expressions the
+    * distributed route uses; the kernel cannot introduce float drift.
+    * Each set is sorted into a primitive array once, so every pair is a
+    * two-pointer `interCount` instead of boxed-set membership tests
+    * (~3x slower on the same pairs). Pairs whose side has no shingle set
+    * are dropped, mirroring `jaccard`'s inner join against the per-id
+    * size table (candidates never reference such docs — both generators
+    * require shingles).
     */
-  def sortedShingleMap(docShingles: Seq[(Long, Seq[Long])])
-      : Map[Long, Array[Long]] =
-    docShingles.iterator.map { case (id, hs) =>
+  def intersectionEvidenceLocal(docShingles: Seq[(Long, Seq[Long])],
+                                pairs: Seq[(Long, Long)])
+      : Seq[(Long, Long, Long, Long, Long)] = {
+    val sorted = docShingles.iterator.map { case (id, hs) =>
       val a = hs.toArray
       java.util.Arrays.sort(a)
       id -> a
     }.toMap
-
-  /** Exact-intersection EVIDENCE for given pairs over collected distinct
-    * shingle sets (as SORTED primitive arrays — see sortedShingleMap):
-    * (a, b, inter, sza, szb) — integers only, so the jaccard/containment
-    * RATIOS (and their r4 rounding) are computed by the SAME Column
-    * expressions the distributed route uses; the kernel cannot introduce
-    * float drift. Pairs whose side has no shingle set are dropped,
-    * mirroring `jaccard`'s inner join against the per-id size table
-    * (candidates never reference such docs — both generators require
-    * shingles).
-    */
-  def intersectionEvidenceLocal(shMap: Map[Long, Array[Long]],
-                                pairs: Seq[(Long, Long)])
-      : Seq[(Long, Long, Long, Long, Long)] =
     pairs.flatMap { case (a, b) =>
-      (shMap.get(a), shMap.get(b)) match {
-        case (Some(sa), Some(sb)) =>
-          var i = 0; var j = 0; var inter = 0L
-          while (i < sa.length && j < sb.length) {
-            if (sa(i) == sb(j)) { inter += 1; i += 1; j += 1 }
-            else if (sa(i) < sb(j)) i += 1
-            else j += 1
-          }
-          Some((a, b, inter, sa.length.toLong, sb.length.toLong))
-        case _ => None
-      }
+      for (sa <- sorted.get(a); sb <- sorted.get(b))
+        yield (a, b, interCount(sa, sb), sa.length.toLong, sb.length.toLong)
     }
+  }
+
+  /** |x ∩ y| of two ascending distinct primitive arrays (two-pointer). */
+  def interCount(x: Array[Long], y: Array[Long]): Long = {
+    var i = 0; var j = 0; var n = 0L
+    while (i < x.length && j < y.length) {
+      if (x(i) == y(j)) { n += 1; i += 1; j += 1 }
+      else if (x(i) < y(j)) i += 1
+      else j += 1
+    }
+    n
+  }
+
+  /** The NumHashes MinHash registers of one shingle-hash set: register
+    * i = min over `hs` of (h * hashA(i) + hashB(i)) % P in 64-bit
+    * arithmetic — the driver kernels' twin of `minhashSignatures` and of
+    * the per-row `MinhashRegisters` expression (identical two's-complement
+    * overflow and sign-preserving % on the JVM and in Spark SQL).
+    */
+  def minhashRegisters(hs: Array[Long]): Array[Long] = {
+    val regs = new Array[Long](NumHashes)
+    var i = 0
+    while (i < NumHashes) {
+      val a = hashA(i); val b = hashB(i)
+      var m = Long.MaxValue
+      var j = 0
+      while (j < hs.length) {
+        val v = (hs(j) * a + b) % P
+        if (v < m) m = v
+        j += 1
+      }
+      regs(i) = m
+      i += 1
+    }
+    regs
+  }
 
   /** SQL twin of `candidatePairsCapped` -> CTE `cand(a, b)` (drop-in for
     * `candidateSql`).
@@ -906,9 +907,11 @@ object Dedup {
     * `SimBits`-sum groupBy, no shuffle (the expression's scaladoc carries
     * the exact-equivalence argument; SimhashParitySpec holds it equal to
     * the old explode + groupBy formulation, kept below for the spec).
+    * Null text yields no row, as in that formulation (and the oracle SQL):
+    * its word explode emits nothing for a null array.
     */
   def simhash(docs: DataFrame, id: Column, text: Column): DataFrame =
-    docs.select(id.as("id"),
+    docs.filter(text.isNotNull).select(id.as("id"),
       org.apache.spark.sql.graft.ArrayExpressions
         .simhashBits(text, SimBits).as("simhash"))
 

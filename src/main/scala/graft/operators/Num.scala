@@ -41,7 +41,6 @@ object Num {
 
   /** Oracle-SQL fragments with the matching bias. */
   def r4Sql(expr: String): String = s"round($expr + 0.00000025, 4)"
-  def floorSql(expr: String): String = s"floor($expr + 0.00000025)"
 
   // ---- integer-grid money arithmetic (round-14, found by the 10x
   // oracle gate) ----

@@ -672,7 +672,8 @@ object CurationQueries {
     * contamination check with the sides swapped: eval shingles build, train
     * docs probe, and the rounded overlap drives the drop decision.
     */
-  def decontamTrain(docs: DataFrame, localMaxDocs: Int = 20000): DataFrame = {
+  def decontamTrain(docs: DataFrame,
+                    localMaxDocs: Int = DedupQueries.LocalMaxDocs): DataFrame = {
     // Driver kernel for bounded corpora (the pairwise-dedup pattern): one
     // bounded collect of (id, split, distinct 3-gram set) — the split
     // label is computed by the ENGINE in the collect projection, so the
@@ -680,7 +681,7 @@ object CurationQueries {
     // hot-cut / per-train-doc hit counts are set operations on the
     // driver, returning integer evidence only; the overlap ratio, its
     // rounding and the drop decision stay the Column expressions below on
-    // both routes (ContaminationRouteParitySpec holds them equal).
+    // both routes (DedupRouteParitySpec holds them equal).
     val s = docs.sparkSession
     contaminationProbe(docs, localMaxDocs) match {
       case Some(probe) =>
@@ -748,20 +749,15 @@ object CurationQueries {
 
   /** Bounded collect for the contamination kernels: (doc_id, split,
     * distinct 3-gram hashes) rows, the split label computed engine-side
-    * in the projection. None past `localMaxDocs` (id-only limit probe
-    * first — the verifiedClusters discipline).
+    * in the projection. None past `localMaxDocs`.
     */
   private def contaminationProbe(docs: DataFrame, localMaxDocs: Int)
       : Option[Array[(Long, String, Seq[Long])]] = {
     val s = docs.sparkSession
     import s.implicits._
-    val bounded = localMaxDocs > 0 &&
-      docs.select(col("doc_id")).limit(localMaxDocs + 1).count() <= localMaxDocs
-    if (!bounded) None
-    else Some(docs.select(col("doc_id"), splitCol(col("doc_id")).as("split"),
-        org.apache.spark.sql.graft.ArrayExpressions
-          .shingleHashes(col("text"), 3).as("hs"))
-      .as[(Long, String, Seq[Long])].collect())
+    DedupQueries.collectBounded[(Long, String, Seq[Long])](docs, "doc_id", localMaxDocs)(
+      col("doc_id"), splitCol(col("doc_id")).as("split"),
+      org.apache.spark.sql.graft.ArrayExpressions.shingleHashes(col("text"), 3).as("hs"))
   }
 
   /** The cool-shingle set of one split side: shingles whose doc frequency
@@ -888,10 +884,6 @@ object CurationQueries {
       resume: Map[String, DataFrame] = Map.empty) {
       val DQ = DedupQueries
 
-      /** Which boundaries this instance resolved from dumps instead of
-        * computing — the structural assertion surface for resume specs.
-        */
-      def resumedBoundaries: Set[String] = resume.keySet
       // corpus ⋈ dump ids → the same (id, text, n_words) rows the stage
       // computed when it was dumped; leaf-rooted like a computed boundary
       // (downstream stages fan these into many consumers)
@@ -1310,7 +1302,7 @@ object CurationQueries {
     * query runs).
     */
   def contamination(docs: org.apache.spark.sql.DataFrame,
-                    localMaxDocs: Int = 20000): org.apache.spark.sql.DataFrame = {
+                    localMaxDocs: Int = DedupQueries.LocalMaxDocs): org.apache.spark.sql.DataFrame = {
     // Driver kernel for bounded corpora — decontamTrain's twin with the
     // sides swapped: the train-side cool set is built once on the driver
     // and each test doc's hit count is a set intersection; integer

@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.{QueryDef, Tables}
 import graft.operators.{Dedup, Num, TextOps}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Dedup query surface over `documents`. The corpus is fully distinct, so
@@ -95,33 +95,73 @@ object DedupQueries {
     */
   private[queries] val LocalPairBudget = 1000000L
 
-  /** Bounded-corpus shingle collect shared by the pairwise driver
-    * kernels: Some((id, distinct shingle-hash array) rows) when the
-    * corpus holds at most `localMaxDocs` docs, None otherwise (the
-    * verifiedClusters probe-then-collect discipline — an id-only limit
-    * probe first, so an oversized corpus never ships shingle arrays just
-    * to learn it must take the distributed route). `localMaxDocs = 0`
-    * forces the distributed route (the route-parity specs' switch).
+  /** Doc bound of the near-dup family's driver-local route: at most this
+    * many docs take the driver kernels (20k docs × ~130 shingles × 8 B ≈
+    * 20 MB on the driver, the ingest guard's collect order); past it the
+    * distributed plan runs. Every `localMaxDocs` default reads it.
     */
-  private[queries] def collectShinglesBounded(
-      docs: DataFrame, n: Int, localMaxDocs: Int): Option[Array[(Long, Seq[Long])]] = {
-    val s = docs.sparkSession
+  private[graft] val LocalMaxDocs = 20000
+
+  /** The near-dup family's size probe: does `docs` hold at most
+    * `localMaxDocs` rows? An id-only `limit(max + 1)` count — column-
+    * pruned, so an oversized corpus never computes shingle arrays just to
+    * learn it must take the distributed route. `localMaxDocs = 0` forces
+    * the distributed route (the route-parity specs' switch).
+    */
+  private[queries] def withinDocBound(docs: DataFrame, id: String,
+                                      localMaxDocs: Int): Boolean =
+    localMaxDocs > 0 &&
+      docs.select(col(id)).limit(localMaxDocs + 1).count() <= localMaxDocs
+
+  /** Bounded collect shared by the driver kernels: `projection` of every
+    * doc when `withinDocBound`, None otherwise.
+    */
+  private[queries] def collectBounded[T: Encoder](docs: DataFrame, id: String,
+      localMaxDocs: Int)(projection: Column*): Option[Array[T]] =
+    if (withinDocBound(docs, id, localMaxDocs))
+      Some(docs.select(projection: _*).as[T].collect())
+    else None
+
+  private type Shingles = Seq[(Long, Seq[Long])]
+  private type Evidence = Seq[(Long, Long, Long, Long, Long)]
+
+  /** The pairwise near-dup kernels' driver-local route: a bounded
+    * (id, distinct shingle hashes) collect of each input, in order (an
+    * input past `localMaxDocs` stops the chain before the next is
+    * probed), then `kernel` over the collected batches with the exact
+    * intersection evidence function over all of them — it generates its
+    * candidate pairs and returns their evidence. None (an input past the
+    * bound, or a generator past its pair budget) sends the caller to its
+    * distributed route.
+    */
+  private def localEvidence[A](localMaxDocs: Int, inputs: DataFrame*)(
+      kernel: (Seq[Shingles], Seq[(Long, Long)] => Evidence) => Option[A]): Option[A] = {
+    val s = inputs.head.sparkSession
     import s.implicits._
-    val bounded = localMaxDocs > 0 &&
-      docs.select(col("id")).limit(localMaxDocs + 1).count() <= localMaxDocs
-    if (!bounded) None
-    else Some(docs.select(col("id"),
-        org.apache.spark.sql.graft.ArrayExpressions
-          .shingleHashes(col("text"), n).as("hs"))
-      .as[(Long, Seq[Long])].collect())
+    val batches = inputs.foldLeft(Option(Vector.empty[Shingles])) { (acc, docs) =>
+      acc.flatMap(bs => collectBounded[(Long, Seq[Long])](docs, "id", localMaxDocs)(
+          col("id"), org.apache.spark.sql.graft.ArrayExpressions
+            .shingleHashes(col("text"), ShingleN).as("hs"))
+        .map(rows => bs :+ rows.toSeq))
+    }
+    batches.flatMap(bs =>
+      kernel(bs, Dedup.intersectionEvidenceLocal(bs.flatten, _)))
   }
+
+  /** Inverted-index candidates (>= 2 shared shingles, the
+    * `invertedCandidatePairs(sh, 2)` twin) with their evidence — the
+    * generator of containmentPairs, ngramJaccard and lshRecall's truth set.
+    */
+  private def invertedEvidence(sh: Shingles,
+                               evidence: Seq[(Long, Long)] => Evidence): Option[Evidence] =
+    Dedup.invertedPairsLocal(sh, 2, LocalPairBudget)
+      .map(cand => evidence(cand.map { case (a, b, _) => (a, b) }))
 
   /** (a, b, inter, sza, szb) rows from a driver kernel, back in
     * DataFrame land — integers only, so every downstream ratio and
     * rounding is the same Column expression the distributed route runs.
     */
-  private def evidenceDF(s: SparkSession,
-                         ev: Seq[(Long, Long, Long, Long, Long)]): DataFrame = {
+  private def evidenceDF(s: SparkSession, ev: Evidence): DataFrame = {
     import s.implicits._
     s.createDataset(ev).toDF("a", "b", "inter", "sza", "szb")
   }
@@ -135,63 +175,38 @@ object DedupQueries {
   private[queries] def verifiedClusters(s: SparkSession, docs: DataFrame,
                                         bucketCap: Option[Int] = None,
                                         localMaxPairs: Int = VerifyLocalMaxPairs,
-                                        localMaxDocs: Int = 20000): DataFrame = {
+                                        localMaxDocs: Int = LocalMaxDocs): DataFrame = {
     import s.implicits._
+    // The local routes' shared tail: the exact-Jaccard cut over integer
+    // evidence (inter*1.0/(sza+szb-inter) in double arithmetic, the same
+    // >= threshold) and driver union-find with the min-id component
+    // contract (VerifiedClustersAdaptiveSpec holds all three routes equal)
+    def localClusters(ev: Evidence): DataFrame = {
+      val verified = ev.collect {
+        case (a, b, inter, sza, szb)
+            if sza + szb - inter > 0 &&
+              inter * 1.0 / (sza + szb - inter) >= JaccardThreshold => (a, b)
+      }
+      val comp = graft.operators.Identity.connectedComponentsLocal(verified)
+      s.createDataset(comp.toSeq).toDF("node", "component")
+    }
     // Whole-pipeline driver kernel for bounded corpora (the
     // containmentDropsAdaptive pattern, one level up): ONE bounded
     // collect of (id, shingle hashes) feeds signatures, banding, capped
     // candidates, the exact-Jaccard verify, and union-find — replacing
     // the band cache + candidate self-join + pair probe + shingle
     // re-collect (~8 AQE stage materializations) the distributed route
-    // pays even when the corpus is a few thousand docs. Memory bound:
-    // localMaxDocs × ~130 shingles × 8 B ≈ 20 MB, the containment
-    // guard's order. Same integers end-to-end
-    // (VerifiedClustersAdaptiveSpec holds the routes equal); at 100 TB
-    // the limit probe short-circuits and the distributed route runs.
-    // id-only size probe first: computing shingle arrays for
-    // localMaxDocs+1 docs just to learn "too big" is a wasted ~20 MB
-    // collect on every large-corpus call (the exact shape that must take
-    // the distributed route)
-    val boundedDocs = localMaxDocs > 0 &&
-      docs.select(col("id")).limit(localMaxDocs + 1).count() <= localMaxDocs
-    if (boundedDocs) {
-      val docProbe = docs
-        .select(col("id"),
-          org.apache.spark.sql.graft.ArrayExpressions
-            .shingleHashes(col("text"), ShingleN).as("hs"))
-        .as[(Long, Seq[Long])].collect()
-      // pair budget: the old pair-probe route bounded the collected pair
-      // list; the local kernel must bound its enumeration the same way —
-      // a boilerplate-dominated uncapped bucket can hold millions of
-      // pairs even under the doc bound. None => distributed verify below.
-      Dedup.candidatePairsLocal(docProbe.toSeq, bucketCap,
-          pairBudget = LocalPairBudget) match {
-        case Some(candLocal) =>
-          // sorted primitive arrays + two-pointer intersections (the
-          // intersectionEvidenceLocal shape) — boxed-set membership tests
-          // measured ~3x slower on the same pairs
-          val shMap = Dedup.sortedShingleMap(docProbe.toSeq)
-          val empty = Array.emptyLongArray
-          def interOf(sa: Array[Long], sb: Array[Long]): Long = {
-            var i = 0; var j = 0; var n = 0L
-            while (i < sa.length && j < sb.length) {
-              if (sa(i) == sb(j)) { n += 1; i += 1; j += 1 }
-              else if (sa(i) < sb(j)) i += 1
-              else j += 1
-            }
-            n
-          }
-          val verified = candLocal.filter { case (a, b) =>
-            val sa = shMap.getOrElse(a, empty)
-            val sb = shMap.getOrElse(b, empty)
-            val inter = interOf(sa, sb)
-            val denom = sa.length.toLong + sb.length - inter
-            denom > 0 && inter * 1.0 / denom >= JaccardThreshold
-          }
-          val comp = graft.operators.Identity.connectedComponentsLocal(verified)
-          return s.createDataset(comp.toSeq).toDF("node", "component")
-        case None => () // pair explosion: fall through to the distributed route
-      }
+    // pays even when the corpus is a few thousand docs. The pair budget
+    // bounds the enumeration the way the pair probe below bounds the
+    // collected pair list — a boilerplate-dominated uncapped bucket can
+    // hold millions of pairs even under the doc bound. None (too many
+    // docs or pairs) => the distributed candidates below.
+    localEvidence(localMaxDocs, docs) { (batches, evidence) =>
+      Dedup.candidatePairsLocal(batches.head, bucketCap, LocalPairBudget)
+        .map(evidence)
+    } match {
+      case Some(ev) => return localClusters(ev)
+      case None => ()
     }
     // Signatures come from the map-only rowwise expression, NOT the
     // shingle-explode + 12-way-min groupBy: same integers (parity asserted
@@ -225,16 +240,7 @@ object DedupQueries {
           org.apache.spark.sql.graft.ArrayExpressions
             .shingleHashes(col("text"), ShingleN).as("hs"))
         .as[(Long, Seq[Long])].collect()
-        .map { case (id, hs) => id -> hs.toSet }.toMap
-      val verified = probe.filter { case (a, b) =>
-        val sa = shArr.getOrElse(a, Set.empty[Long])
-        val sb = shArr.getOrElse(b, Set.empty[Long])
-        val inter = sa.count(sb.contains)
-        val denom = sa.size.toLong + sb.size - inter
-        denom > 0 && inter * 1.0 / denom >= JaccardThreshold
-      }
-      val comp = graft.operators.Identity.connectedComponentsLocal(verified.toSeq)
-      s.createDataset(comp.toSeq).toDF("node", "component")
+      localClusters(Dedup.intersectionEvidenceLocal(shArr.toSeq, probe.toSeq))
     } else {
       // The exact-Jaccard verify only ever looks at docs that appear in a
       // candidate pair — shingle THOSE, not the whole corpus. The
@@ -338,7 +344,7 @@ object DedupQueries {
     * QueryDef comment for semantics and thresholds).
     */
   def containmentPairs(docs: DataFrame,
-                       localMaxDocs: Int = 20000): DataFrame = {
+                       localMaxDocs: Int = LocalMaxDocs): DataFrame = {
     // Driver kernel for bounded corpora (the verifiedClusters pattern):
     // the inverted-index pair enumeration runs over one collected shingle
     // batch and only INTEGER evidence returns to DataFrame land — the
@@ -347,14 +353,8 @@ object DedupQueries {
     // fork a float boundary (DedupRouteParitySpec holds the routes
     // equal). Budget-guarded: past LocalPairBudget raw pairs (the Σ df²
     // shape) or localMaxDocs, the distributed plan runs unchanged.
-    val localEv = collectShinglesBounded(docs, ShingleN, localMaxDocs)
-      .flatMap { probe =>
-        Dedup.invertedPairsLocal(probe.toSeq, 2, LocalPairBudget).map { cand =>
-          val shMap = Dedup.sortedShingleMap(probe.toSeq)
-          Dedup.intersectionEvidenceLocal(
-            shMap, cand.map { case (a, b, _) => (a, b) })
-        }
-      }
+    val localEv = localEvidence(localMaxDocs, docs)((batches, evidence) =>
+      invertedEvidence(batches.head, evidence))
     val directed = localEv match {
       case Some(ev) =>
         val s = docs.sparkSession
@@ -390,14 +390,9 @@ object DedupQueries {
     * rounding stay the same Column expressions either way.
     */
   private[queries] def minhashLsh(s: SparkSession, docs: DataFrame,
-                                  localMaxDocs: Int = 20000): DataFrame = {
-    val localEv = collectShinglesBounded(docs, ShingleN, localMaxDocs)
-      .flatMap { probe =>
-        Dedup.candidatePairsLocal(probe.toSeq, None, LocalPairBudget).map { cand =>
-          val shMap = Dedup.sortedShingleMap(probe.toSeq)
-          Dedup.intersectionEvidenceLocal(shMap, cand)
-        }
-      }
+                                  localMaxDocs: Int = LocalMaxDocs): DataFrame = {
+    val localEv = localEvidence(localMaxDocs, docs)((batches, evidence) =>
+      Dedup.candidatePairsLocal(batches.head, None, LocalPairBudget).map(evidence))
     val jac = localEv match {
       case Some(ev) => evidenceDF(s, ev).withColumn("jaccard", jaccardCol)
       case None =>
@@ -432,15 +427,9 @@ object DedupQueries {
     * shingles) + exact Jaccard at 0.3, adaptive like `minhashLsh`.
     */
   private[queries] def ngramJaccard(s: SparkSession, docs: DataFrame,
-                                    localMaxDocs: Int = 20000): DataFrame = {
-    val localEv = collectShinglesBounded(docs, ShingleN, localMaxDocs)
-      .flatMap { probe =>
-        Dedup.invertedPairsLocal(probe.toSeq, 2, LocalPairBudget).map { cand =>
-          val shMap = Dedup.sortedShingleMap(probe.toSeq)
-          Dedup.intersectionEvidenceLocal(
-            shMap, cand.map { case (a, b, _) => (a, b) })
-        }
-      }
+                                    localMaxDocs: Int = LocalMaxDocs): DataFrame = {
+    val localEv = localEvidence(localMaxDocs, docs)((batches, evidence) =>
+      invertedEvidence(batches.head, evidence))
     val jac = localEv match {
       case Some(ev) => evidenceDF(s, ev).withColumn("jaccard", jaccardCol)
       case None =>
@@ -464,15 +453,10 @@ object DedupQueries {
     * candidate generator.
     */
   private[queries] def multisignalPairs(s: SparkSession, docs: DataFrame,
-                                        localMaxDocs: Int = 20000): DataFrame = {
-    val localEv = collectShinglesBounded(docs, ShingleN, localMaxDocs)
-      .flatMap { probe =>
-        Dedup.candidatePairsLocal(probe.toSeq, Some(LshBucketCap),
-          LocalPairBudget).map { cand =>
-          val shMap = Dedup.sortedShingleMap(probe.toSeq)
-          Dedup.intersectionEvidenceLocal(shMap, cand)
-        }
-      }
+                                        localMaxDocs: Int = LocalMaxDocs): DataFrame = {
+    val localEv = localEvidence(localMaxDocs, docs)((batches, evidence) =>
+      Dedup.candidatePairsLocal(batches.head, Some(LshBucketCap), LocalPairBudget)
+        .map(evidence))
     val jac = localEv match {
       case Some(ev) => evidenceDF(s, ev).withColumn("jaccard", jaccardCol)
       case None =>
@@ -519,7 +503,7 @@ object DedupQueries {
                                         // so it falls back distributed there
                                         localMaxRows: Int = 400000,
                                         maxPairs: Long = 500000L,
-                                        localMaxDocs: Int = 20000): DataFrame = {
+                                        localMaxDocs: Int = LocalMaxDocs): DataFrame = {
     import s.implicits._
     // distinct (source, h): the per-SOURCE shingle set (shingleHashes
     // already dedups within a doc; sources need one more distinct)
@@ -534,10 +518,8 @@ object DedupQueries {
     // cannot be worth the probe (50k docs put the distinct far past
     // 400k rows), so it goes straight to the distributed plan, whose
     // consumers populate the cache INSIDE the one job where the work
-    // overlaps (guide §2.6). The cheap id-limit count is column-pruned —
-    // the verifiedClusters probe discipline.
-    val docBounded = localMaxRows > 0 && localMaxDocs > 0 &&
-      docs.select(col("doc_id")).limit(localMaxDocs + 1).count() <= localMaxDocs
+    // overlaps (guide §2.6).
+    val docBounded = localMaxRows > 0 && withinDocBound(docs, "doc_id", localMaxDocs)
     // count-then-collect, NOT limit(bound+1).collect(): a GlobalLimit
     // past ~1e6 rows funnels the whole relation through ONE gather task
     // (measured: the 10x tier paid ~3 s in that single task); the cache
@@ -559,35 +541,8 @@ object DedupQueries {
       val nPairs = sources.size.toLong * (sources.size - 1) / 2
       if (nPairs > maxPairs) None
       else {
-        // registers per source — the same 64-bit (h * a_i + b_i) % P
-        // arithmetic as minhashSignatures (the candidatePairsLocal
-        // precedent)
-        val regs = bySource.map { case (src, hs) =>
-          val r = new Array[Long](Dedup.NumHashes)
-          var i = 0
-          while (i < Dedup.NumHashes) {
-            val a = Dedup.hashA(i); val b = Dedup.hashB(i)
-            var m = Long.MaxValue
-            var j = 0
-            while (j < hs.length) {
-              val v = (hs(j) * a + b) % Dedup.P
-              if (v < m) m = v
-              j += 1
-            }
-            r(i) = m
-            i += 1
-          }
-          src -> r
-        }
-        def interCount(x: Array[Long], y: Array[Long]): Long = {
-          var i = 0; var j = 0; var n = 0L
-          while (i < x.length && j < y.length) {
-            if (x(i) == y(j)) { n += 1; i += 1; j += 1 }
-            else if (x(i) < y(j)) i += 1
-            else j += 1
-          }
-          n
-        }
+        // registers per source — the same arithmetic as minhashSignatures
+        val regs = bySource.map { case (src, hs) => src -> Dedup.minhashRegisters(hs) }
         val ev = for {
           ai <- sources.indices
           bi <- (ai + 1) until sources.size
@@ -601,7 +556,7 @@ object DedupQueries {
             if (ra(k) == rb(k)) agree += 1
             k += 1
           }
-          (a, b, interCount(xa, xb), xa.length.toLong, xb.length.toLong, agree)
+          (a, b, Dedup.interCount(xa, xb), xa.length.toLong, xb.length.toLong, agree)
         }
         Some(s.createDataset(ev)
           .toDF("a", "b", "n_common", "sz_a", "sz_b", "n_agree"))
@@ -646,19 +601,13 @@ object DedupQueries {
     * and recall aggregation stay engine-side on both routes.
     */
   private[queries] def lshRecall(s: SparkSession, docs: DataFrame,
-                                 localMaxDocs: Int = 20000): DataFrame = {
-    val local = collectShinglesBounded(docs, ShingleN, localMaxDocs)
-      .flatMap { probe =>
-        for {
-          truthCand <- Dedup.invertedPairsLocal(probe.toSeq, 2, LocalPairBudget)
-          lshCand <- Dedup.candidatePairsLocal(probe.toSeq, None, LocalPairBudget)
-        } yield {
-          val shMap = Dedup.sortedShingleMap(probe.toSeq)
-          val ev = Dedup.intersectionEvidenceLocal(
-            shMap, truthCand.map { case (a, b, _) => (a, b) })
-          (ev, lshCand)
-        }
-      }
+                                 localMaxDocs: Int = LocalMaxDocs): DataFrame = {
+    val local = localEvidence(localMaxDocs, docs) { (batches, evidence) =>
+      for {
+        truthEv <- invertedEvidence(batches.head, evidence)
+        lshCand <- Dedup.candidatePairsLocal(batches.head, None, LocalPairBudget)
+      } yield (truthEv, lshCand)
+    }
     local match {
       case Some((ev, lshCand)) =>
         import s.implicits._
@@ -703,17 +652,11 @@ object DedupQueries {
     */
   private[queries] def incrementalDedup(s: SparkSession, corpus: DataFrame,
                                         batch: DataFrame,
-                                        localMaxDocs: Int = 20000): DataFrame = {
-    val localEv =
-      for {
-        corpusSh <- collectShinglesBounded(corpus, ShingleN, localMaxDocs)
-        batchSh <- collectShinglesBounded(batch, ShingleN, localMaxDocs)
-        cand <- Dedup.candidatePairsAcrossLocal(
-          corpusSh.toSeq, batchSh.toSeq, LocalPairBudget)
-      } yield {
-        val shMap = Dedup.sortedShingleMap(corpusSh.toSeq ++ batchSh.toSeq)
-        Dedup.intersectionEvidenceLocal(shMap, cand)
-      }
+                                        localMaxDocs: Int = LocalMaxDocs): DataFrame = {
+    val localEv = localEvidence(localMaxDocs, corpus, batch) { (batches, evidence) =>
+      Dedup.candidatePairsAcrossLocal(batches(0), batches(1), LocalPairBudget)
+        .map(evidence)
+    }
     val jac = localEv match {
       case Some(ev) => evidenceDF(s, ev).withColumn("jaccard", jaccardCol)
       case None =>
@@ -891,7 +834,7 @@ object DedupQueries {
     * stage never scans the corpus twice for its own denominator.
     */
   def containmentDropsAdaptive(docs: DataFrame, hotPct: Int = ContainHotPct,
-      localMaxDocs: Int = 20000): DataFrame = {
+      localMaxDocs: Int = LocalMaxDocs): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
     val nDocs = docs.count()
@@ -1714,7 +1657,7 @@ object DedupQueries {
     * the ExactSubstr cut as a per-doc keep/trim/drop manifest with exact
     * cut-token counts.
     */
-  def spanSurvivors(docs: DataFrame, localMaxDocs: Int = 20000): DataFrame = {
+  def spanSurvivors(docs: DataFrame, localMaxDocs: Int = LocalMaxDocs): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // Driver-local fast path (the verifiedClusters/containment pattern):
     // ONE bounded collect of (id, n_words, positional span hashes)
@@ -1732,25 +1675,23 @@ object DedupQueries {
     val nWordsCol =
       if (docs.columns.contains("n_words")) col("n_words")
       else size(TextOps.words(col("text"))).cast("long")
-    // id-only size probe first — same rationale as verifiedClusters: no
-    // positional-hash computation just to learn the corpus is too big
-    val boundedDocs = localMaxDocs > 0 &&
-      docs.select(col("doc_id")).limit(localMaxDocs + 1).count() <= localMaxDocs
-    if (boundedDocs) {
-      val docProbe = docs.select(col("doc_id"), nWordsCol.as("n_words"),
-          org.apache.spark.sql.graft.ArrayExpressions
-            .shingleHashSeq(col("text"), SpanN).as("hs"))
-        .as[(Long, Long, Seq[Long])].collect()
-      val cutMap = spanCutLocal(docProbe.map { case (id, _, hs) => (id, hs) }.toSeq)
-      val rows = docProbe.map { case (id, n, _) =>
-        val c = cutMap.getOrElse(id, 0L)
-        val kept = n - c
-        val action =
-          if (c == 0L) "keep" else if (kept < MinKeepTokens) "drop" else "trim"
-        (id, n, c, kept, action)
-      }
-      return spark.createDataset(rows.toSeq)
-        .toDF("doc_id", "n_words", "n_cut_tokens", "n_kept_tokens", "action")
+    val local = collectBounded[(Long, Long, Seq[Long])](docs, "doc_id", localMaxDocs)(
+      col("doc_id"), nWordsCol.as("n_words"),
+      org.apache.spark.sql.graft.ArrayExpressions
+        .shingleHashSeq(col("text"), SpanN).as("hs"))
+    local match {
+      case Some(docProbe) =>
+        val cutMap = spanCutLocal(docProbe.map { case (id, _, hs) => (id, hs) }.toSeq)
+        val rows = docProbe.map { case (id, n, _) =>
+          val c = cutMap.getOrElse(id, 0L)
+          val kept = n - c
+          val action =
+            if (c == 0L) "keep" else if (kept < MinKeepTokens) "drop" else "trim"
+          (id, n, c, kept, action)
+        }
+        return spark.createDataset(rows.toSeq)
+          .toDF("doc_id", "n_words", "n_cut_tokens", "n_kept_tokens", "action")
+      case None => ()
     }
     val win = Window.partitionBy(col("id")).orderBy(col("pos"))
     // island-level interval union: an island of cnt consecutive starts

@@ -104,9 +104,10 @@ object CurationPipeline {
   /** Batch-size bound for the driver-local containment kernel: under it,
     * one shingle collect (the decision log already collects the batch);
     * over it, the distributed `containmentDrops` operator — the
-    * connectedComponentsAdaptive small-case/fallback pattern.
+    * connectedComponentsAdaptive small-case/fallback pattern. The
+    * near-dup family's doc bound.
     */
-  val MaxLocalContainDocs = 20000
+  val MaxLocalContainDocs = graft.queries.DedupQueries.LocalMaxDocs
 
   private val HashSchema = "text_hash STRING"
   private val BandSchema = "id BIGINT, band INT, key STRING"

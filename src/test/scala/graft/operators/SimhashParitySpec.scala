@@ -7,7 +7,8 @@ import org.apache.spark.sql.functions._
   * r18 explode + 60-sum groupBy formulation bit-for-bit — the oracle SQL
   * still computes the groupBy form, so any divergence is a correctness
   * break, not a perf regression. Randomized corpora cover the traps: empty
-  * text (tokenizes to [""] — both paths emit a row), repeated words
+  * text (tokenizes to [""] — both paths emit a row), null text (neither
+  * path emits a row), repeated words
   * (multiset votes), whitespace-edged text (wordsJvm/words parity), and
   * exact vote ties (2 * ones == n -> bit clear).
   */
@@ -33,7 +34,7 @@ class SimhashParitySpec extends SparkSpec {
     val s = spark
     import s.implicits._
     for (seed <- Seq(1L, 2L, 3L)) {
-      val docs = corpus(seed, 120).toDF("id", "text")
+      val docs = (corpus(seed, 120) :+ ((-1L, null: String))).toDF("id", "text")
       val fast = Dedup.simhash(docs, col("id"), col("text"))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       val ref = Dedup.simhashViaGroupBy(docs, col("id"), col("text"))
